@@ -150,9 +150,12 @@ class CrawlConfig:
                                            # coalesce — each corpus bucket still
                                            # merge-joins independently — so small
                                            # protocol-bound rounds run one wave
-                                           # (~185 ms/task fixed Python-runner cost
-                                           # measured on this box) while big rounds
-                                           # keep fine granularity for load balance
+                                           # while big rounds keep fine granularity
+                                           # for load balance. Sized when a Python
+                                           # task had ~185 ms of fixed cost, mostly
+                                           # per-task zip-archive re-reads that
+                                           # worker_daemon removes; ~70 ms remain
+                                           # (identity mapInArrow, 4-core box)
     # delta schema version (plans/crawl.QUEUED_COLS note): False (v2,
     # default) derives `referrer` from parent_seq at read time — the
     # candidate exchanges and seen/fetched deltas are ~45 B/row narrower;

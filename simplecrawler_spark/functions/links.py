@@ -70,7 +70,7 @@ def _strip_wrapper(s: str) -> str:
     return _QUOTE_RE.sub("", s.strip())
 
 
-_AMP_ONLY = re.compile(r"&(amp|lt|gt|quot|#\d+|#x[0-9a-fA-F]+);")
+_AMP_ONLY = re.compile(r"&(?:amp|lt|gt|quot|#\d+|#x[0-9a-fA-F]+);")
 
 
 def _clean_raw(s: str) -> str | None:

@@ -481,8 +481,11 @@ def _verify_pairs_arrow(cand: DataFrame, hashed: DataFrame,
 
     spark = cand.sparkSession
     # orderBy + collect_set: ids arrive sorted and slices arrive sorted +
-    # deduped straight from the JVM — no driver-side argsort/gather/dedupe
-    agg = (hashed.groupBy("_id").agg(
+    # deduped straight from the JVM — no driver-side argsort/gather/dedupe.
+    # Null ids never reach a candidate pair (the band join's a < b drops
+    # them), and one would sort first and turn the collected ids into
+    # NaN-led float64, breaking the sorted order searchsorted relies on.
+    agg = (hashed.where(F.col("_id").isNotNull()).groupBy("_id").agg(
                F.sort_array(F.collect_set("h")).alias("hs"),
                F.count(F.lit(1)).alias("ng"))
            .orderBy("_id"))

@@ -498,9 +498,11 @@ class CrawlEngine:
 
         try:
             counters = obs.get  # populated by the dedupe/assign pass; no extra job
-        except Exception:
+        except Exception as exc:
             # defensive: if the observe node was optimized out of every
             # executed plan, fall back to one explicit pass
+            _LOG.warning("round %d: admission observation unavailable (%s); "
+                         "recounting gate outcomes with an extra job", rnd, exc)
             counters = gated.groupBy().agg(
                 *[F.sum(F.when(F.col("reject") == r, 1).otherwise(0)).alias(r) for r in reasons],
                 F.sum(F.when(F.col("reject").isNull(), 1).otherwise(0)).alias("admitted"),
@@ -585,10 +587,12 @@ class CrawlEngine:
         delta.write.mode("overwrite").parquet(self.wh.round_dir("robots", rnd))
         try:
             c = obs.get
+        except Exception as exc:
+            _LOG.warning("round %d: robots observation unavailable (%s); "
+                         "robotstxtfetched/robotstxterror not counted", rnd, exc)
+        else:
             self._bump("robotstxtfetched", int(c["ok"] or 0))
             self._bump("robotstxterror", int(c["err"] or 0))
-        except Exception:
-            pass
         self._reload_robots(rnd)
 
     COOKIE_FOLD_SCHEMA = ("seq long, failure string, host string, "
@@ -1180,9 +1184,13 @@ class CrawlEngine:
             # size the stage's COMPUTE task count to the round's data volume
             # (cfg.round_tasks to override): the fused scan→join→writer stage
             # otherwise runs one task per CORPUS BUCKET, and each Python-runner
-            # task carries ~185 ms of fixed protocol cost on this box even warm
-            # (BENCH.md §2e) — 64 buckets × 0.5 s was the dominant term of the
-            # measured 8.3 s/round serial floor on protocol-bound small rounds.
+            # task carries a fixed cost even warm (BENCH.md §2e) — 64 buckets
+            # × 0.5 s was the dominant term of the measured 8.3 s/round serial
+            # floor on protocol-bound small rounds. That cost, ~185 ms/task
+            # then, was mostly each task re-reading the pyspark.zip/py4j
+            # archive directories (importlib.invalidate_caches on CPython
+            # < 3.12), which the worker daemon (worker_daemon.py) removes: an
+            # identity mapInArrow task on a 4-core box went ~200 → ~70 ms.
             # Sizing rule (BENCH.md §2f, measured both regimes): ~32k batch
             # rows per task, floored at session parallelism — small rounds run
             # one wave (floor; cuts the serial floor 43%), big rounds keep
@@ -1255,7 +1263,9 @@ class CrawlEngine:
             t = self._tick("admit_dedupe_assign", t)
             try:
                 evc = ev_obs.get  # filled by the round's job; no extra action
-            except Exception:
+            except Exception as exc:
+                _LOG.warning("round %d: event observation unavailable (%s); "
+                             "recounting fetch events with an extra job", rnd, exc)
                 evc = outcomes.groupBy().agg(
                     *[F.sum(F.when(F.col("event") == e, 1).otherwise(0)).alias(e)
                       for e in event_names],
@@ -1270,7 +1280,11 @@ class CrawlEngine:
             if gz_obs is not None:
                 try:
                     gz = int(gz_obs.get["gziperror"] or 0)
-                except Exception:
+                except Exception as exc:
+                    # the bodies streamed through the round's writer once;
+                    # recounting would re-run the whole round
+                    _LOG.warning("round %d: gzip observation unavailable (%s); "
+                                 "gziperror not counted", rnd, exc)
                     gz = 0
                 if gz:
                     ev_rows.append(("gziperror", gz))

@@ -3,11 +3,34 @@
 Local testing uses ``local[N]``; on a real cluster the same conf ships via
 ``spark-submit --py-files`` (north_rule: pure-Python deployability — no
 custom jars, no Scala).
+
+The Python workers are forked from :mod:`simplecrawler_spark.worker_daemon`
+(``spark.python.daemon.module``), which stops every task from re-reading the
+``pyspark.zip``/py4j archive directories on CPython < 3.12. The executors'
+Python must therefore be able to import this package when the daemon starts:
+true in local mode (the driver's working directory or ``PYTHONPATH``), for a
+pip install, and with YARN ``--py-files``. Where it is not, pass
+``extra={"spark.python.daemon.module": "pyspark.daemon"}`` to run the stock
+daemon.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import SparkSession
+
+
+def _driver_memory() -> str:
+    """48 GB, or half the machine's physical memory where that is less. In
+    local mode the driver JVM also runs the executors, and G1 grows its heap
+    toward the maximum before it collects hard: with a maximum above the
+    machine's memory the kernel kills the JVM mid-job instead."""
+    try:
+        phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    except (AttributeError, ValueError, OSError):
+        return "48g"
+    return f"{min(48 << 10, phys_mb // 2)}m"
 
 
 def get_spark(app: str = "simplecrawler-spark", master: str = "local[4]",
@@ -37,13 +60,14 @@ def get_spark(app: str = "simplecrawler-spark", master: str = "local[4]",
         # bounded Arrow batches: binary payload rows can be 10-100 KB each,
         # so 4096 rows keeps Spark→Python transfers in the tens of MB
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
-        .config("spark.driver.memory", "48g")
+        .config("spark.driver.memory", _driver_memory())
         # binary payload columns: 4096-row columnar batches reach ~100 MB —
         # with 32 concurrent scan tasks that's several GB of heap churn.
         # 1024 rows keeps per-task batches ~25 MB at 128px-image scale.
         .config("spark.sql.parquet.columnarReaderBatchSize", "1024")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.python.daemon.module", "simplecrawler_spark.worker_daemon")
     )
     for k, v in (extra or {}).items():
         b = b.config(k, v)

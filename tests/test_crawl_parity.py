@@ -351,6 +351,36 @@ def test_parity_html_discovery_mode(spark, corpus, tmp_path):
     _assert_parity(spark, result, oresult)
 
 
+def test_observation_fallbacks_warn_and_keep_parity(spark, corpus, tmp_path,
+                                                    monkeypatch, caplog):
+    """When ``Observation.get`` fails, the admission and fetch-event counters
+    are recounted with an extra job and still match the oracle; each
+    fallback, including the gziperror count that cannot be recovered, logs
+    a warning naming its round."""
+    import logging
+    import re
+
+    from pyspark.sql import Observation
+
+    def unavailable(self):
+        raise RuntimeError("observation forced unavailable")
+
+    monkeypatch.setattr(Observation, "get", property(unavailable))
+    d, p = corpus
+    cfg = CrawlConfig(seeds=["http://host0.example/p/0"], budget=96,
+                      dedupe_mode="exact", max_rounds=500,
+                      discovery_mode="html")
+    with caplog.at_level(logging.WARNING, logger="simplecrawler_spark.plans.crawl"):
+        result, oresult = _run_both(spark, d, cfg, tmp_path)
+    msgs = [r.getMessage() for r in caplog.records]
+    for what in ("admission", "event", "gzip"):
+        assert any(re.match(rf"round \d+: {what} observation unavailable", m)
+                   for m in msgs), (what, msgs[:5])
+    assert oresult.events.pop("gziperror", 0) > 0
+    assert not result.events.get("gziperror")
+    _assert_parity(spark, result, oresult)
+
+
 def test_parity_conditional_get_refetch(spark, corpus, tmp_path):
     """S6/J3 in the loop: with use_cache=True, a force-re-enqueued URL (true
     duplicate, own seq) fetched in a LATER round carries If-None-Match from

@@ -109,6 +109,19 @@ def test_vectorized_cleanup_matches_scalar():
     assert got == want
 
 
+def test_vectorized_cleanup_emits_no_warning():
+    import warnings
+
+    from simplecrawler_spark.functions.links import _clean_raw_series
+
+    # a capturing group in a str.contains pattern makes pandas warn on
+    # every cleanup batch
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        out = _clean_raw_series(pd.Series(["/a?x=1&amp;y=2", "B&W", None], dtype=object))
+    assert list(out) == ["/a?x=1&y=2", "B&W", None]
+
+
 # ---- F7 decompression + F6 charset decode (functions/body.py) ----
 
 def test_decompress_gzip_deflate_identity():

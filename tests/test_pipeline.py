@@ -496,6 +496,31 @@ def test_minhash_oph_non_long_ids_take_jvm_path(spark, tmp_path, monkeypatch):
     assert all(isinstance(r["a"], str) for r in out)
 
 
+def test_minhash_oph_arrow_verify_ignores_null_ids(spark, tmp_path, monkeypatch):
+    """A null doc id (which sorts first in the collected id column) must not
+    disturb the arrow verify: it returns exactly the JVM path's pairs."""
+    base = ("the quick brown fox jumps over the lazy dog and then "
+            "runs far away into the hills ")
+    rows = [(i, base + "tail " + "x y z w " * (i % 5)) for i in range(30)]
+    rows.append((None, base + "tail "))
+    p = str(tmp_path / "docs_null.parquet")
+    spark.createDataFrame(rows, "doc_id long, text string").coalesce(1).write.parquet(p)
+    docs = spark.read.parquet(p)
+    from simplecrawler_spark import pipeline as pl
+
+    monkeypatch.setenv("SPARK_GRAFT_VERIFY_ARROW_MIN_BYTES", "0")
+    got = {}
+    for arrow in ("1", "0"):
+        monkeypatch.setenv("SPARK_GRAFT_VERIFY_ARROW", arrow)
+        df = dedup.minhash_oph_pairs(docs, threshold=0.5)
+        assert ("MapInArrow" in df._jdf.queryExecution().executedPlan().toString()) \
+            == (arrow == "1")
+        got[arrow] = sorted(tuple(r) for r in df.collect())
+        pl.release_cached()
+    assert len(got["1"]) > 0
+    assert got["1"] == got["0"]
+
+
 def test_minhash_oph_pair_local_verify_replays_reference(spark):
     """r6 optimization guardrail: the pair-LOCAL verify (per-doc gram-hash
     arrays + array_intersect + size-ratio prune) must reproduce the banded-
