@@ -6,7 +6,7 @@ expansion over snapshot-versioned Parquet tables of image+caption pairs.
 
 This is NOT a port: the reference is a single-node event loop over a mutable
 in-memory array (``lib/queue.js``); this engine is declarative DataFrame
-dataflow — anti-join dedupe with Bloom/cuckoo prefilter tiers, windowed
+dataflow — anti-join dedupe behind per-bucket Bloom prefilters, windowed
 per-host politeness scheduling with skew-safe two-stage top-k, vectorized
 Arrow UDF canonicalization, and atomic snapshot manifests for resume.
 

@@ -20,6 +20,13 @@ from __future__ import annotations
 import json
 from dataclasses import dataclass, field, asdict
 
+_MODES = {
+    "dedupe_mode": ("exact", "tiered"),
+    "fetch_mode": ("table", "http"),
+    "discovery_mode": ("table", "html"),
+    "robots_mode": ("table", "lazy"),
+}
+
 
 @dataclass
 class CrawlConfig:
@@ -138,7 +145,7 @@ class CrawlConfig:
                                            # gets max(1, floor(round_seconds/d)) fetches/round
 
     # --- engine / scale knobs (no reference analog) ---
-    n_buckets: int = 32                    # url_seen hash-partition buckets (bloom/cuckoo sidecars per bucket)
+    n_buckets: int = 32                    # url_seen hash-partition buckets (one Bloom sidecar per bucket)
     shuffle_partitions: int = 32
     round_tasks: int = 0                   # compute-task count for the round's fused
                                            # scan→fetch-join→writer stage; 0 = sized
@@ -162,9 +169,11 @@ class CrawlConfig:
     # True (v1) stores it inline. A resumed warehouse must keep the layout
     # it was started with (resume_state validates).
     referrer_in_delta: bool = False
-    dedupe_mode: str = "tiered"            # "exact" | "tiered" (bloom → cuckoo → exact)
-    bloom_bits_per_key: int = 10
-    seen_capacity: int = 2_000_000         # sizes the per-bucket bloom/cuckoo sidecars
+    dedupe_mode: str = "tiered"            # "exact" | "tiered" (bloom → exact probe)
+    bloom_bits_per_key: int = 16           # k = 11; ~0.07% false passes at full load
+    # sizes the per-bucket Bloom sidecars; an undersized capacity saturates
+    # the Bloom — it costs exact-probe reads, never correctness
+    seen_capacity: int = 2_000_000
     hot_host_threshold: int = 100_000      # pending-count above which a host's window is salted (W2 skew split)
     n_salts: int = 8
 
@@ -196,6 +205,12 @@ class CrawlConfig:
         # `cfg.round_tasks or ...` guard and reaches DataFrame.coalesce())
         if self.round_tasks < 0:
             raise ValueError(f"round_tasks must be >= 0, got {self.round_tasks}")
+        # a misspelled mode would silently take some other branch — e.g. a
+        # dedupe_mode that is neither value probes Blooms no round writes
+        for name, allowed in _MODES.items():
+            if getattr(self, name) not in allowed:
+                raise ValueError(f"{name} must be one of {allowed}, "
+                                 f"got {getattr(self, name)!r}")
 
     def to_json(self) -> str:
         return json.dumps(asdict(self), sort_keys=True)

@@ -8,23 +8,28 @@ membership structure:
   tier 1  per-bucket **Bloom filter** sidecar (numpy bitset over the JVM-side
           ``xxhash64(url_norm)`` value; k hashes by double hashing) —
           negatives are *definitely new* (no false negatives by construction);
-  tier 2  per-bucket **cuckoo filter** (4-slot buckets, 16-bit partial-key
-          fingerprints) verifies Bloom positives — FPR ~2^-12 kills almost
-          all residue (north_rule verification tier, BASELINE.json:14);
-  tier 3  **exact probe** of the bucket's ``url_seen`` parquet deltas via a
-          pyarrow predicate read *inside the same executor task* — no
-          shuffle of the (huge) seen table, ever — and no shuffle of the
+          at the default 16 bits/key (k = 11) ~0.07% of new keys pass at full
+          bucket load;
+  tier 2  **exact probe** of the bucket's ``url_seen`` parquet deltas via a
+          pyarrow predicate read *inside the same executor task*; it decides
+          membership for every Bloom pass. No shuffle of the (huge) seen
+          table, ever — and no shuffle of the
           candidates either: ``bucket = pmod(hash(url_hash, url_norm), P)``
           is Spark's own shuffle hash over the in-batch dedupe's group keys,
           so the probe rides the dedupe aggregation's existing exchange
           (partition i == bucket i when P == shuffle partitions).
 
+The Bloom filter is the probe's data-induced predicate (*Pushing
+Data-Induced Predicates Through Joins in Big-Data Clusters*, VLDB 2019).
+An undersized ``seen_capacity`` only saturates it: more exact probes, never
+a wrong answer.
+
 ``dedupe_mode="exact"`` bypasses the tiers with a plain left-anti join
 (small-scale truth baseline; parity tests assert tiered ≡ exact).
 
 Sidecars live on the shared filesystem (warehouse/sidecars/bucket=B/) and are
-updated once per round by a one-task-per-bucket ``applyInPandas`` pass —
-idempotent (bit-OR / slot-insert), atomic (tmp + rename), and rebuilt from
+updated once per round by a one-task-per-bucket ``mapInArrow`` pass —
+idempotent (bit-OR), atomic (tmp + rename), and rebuilt from
 the authoritative parquet on resume (storage/snapshots.py docstring).
 """
 
@@ -39,7 +44,6 @@ import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, functions as F
 
 _MIX = np.uint64(0x9E3779B97F4A7C15)
-_FP_MIX = np.uint64(0x5BD1E995)
 
 
 def _u64(hashes: np.ndarray) -> np.ndarray:
@@ -69,106 +73,44 @@ def bloom_add(bits: np.ndarray, h: np.ndarray, k: int) -> None:
     np.bitwise_or.at(bits, idx.ravel() >> 3, (1 << (idx.ravel() & 7)).astype(np.uint8))
 
 
-# ---------------- Cuckoo tier ----------------
-# table: (nb, 4) uint16; 0 = empty slot. Partial-key cuckoo: alt bucket =
-# b XOR (fp * MIX) mod nb (nb power of two).
-
-def _fingerprints(h: np.ndarray) -> np.ndarray:
-    fp = ((_u64(h) >> np.uint64(32)) & np.uint64(0xFFFF)).astype(np.uint16)
-    fp[fp == 0] = 1
-    return fp
-
-
-def _buckets(h: np.ndarray, fp: np.ndarray, nb: int) -> tuple[np.ndarray, np.ndarray]:
-    mask = np.uint64(nb - 1)
-    b1 = (_u64(h) & mask).astype(np.int64)
-    b2 = ((b1.astype(np.uint64) ^ (fp.astype(np.uint64) * _FP_MIX)) & mask).astype(np.int64)
-    return b1, b2
-
-
-def cuckoo_check(table: np.ndarray, h: np.ndarray) -> np.ndarray:
-    fp = _fingerprints(h)
-    b1, b2 = _buckets(h, fp, table.shape[0])
-    hit = np.zeros(len(h), dtype=bool)
-    for s in range(table.shape[1]):
-        hit |= table[b1, s] == fp
-        hit |= table[b2, s] == fp
-    return hit
-
-
-def cuckoo_add(table: np.ndarray, h: np.ndarray, rng_seed: int = 7) -> bool:
-    """Insert all; returns False if table overflowed (caller must resize —
-    engine sizes from ``seen_capacity`` so this is a guard, not a path).
-    Vectorized first-choice waves; eviction loop only for the residue.
-
-    Idempotent: keys whose fingerprint is already present in either candidate
-    bucket are skipped, so a retried/speculative task re-running the same
-    batch does not inflate occupancy (and cannot trigger a spurious
-    overflow)."""
-    fp = _fingerprints(h)
-    b1, b2 = _buckets(h, fp, table.shape[0])
-    pending = np.arange(len(h))[~cuckoo_check(table, h)]
-    for bsel in (b1, b2):
-        if not len(pending):
-            break
-        keep = []
-        for j in pending:
-            row = table[bsel[j]]
-            slot = np.flatnonzero(row == 0)
-            if len(slot):
-                row[slot[0]] = fp[j]
-            else:
-                keep.append(j)
-        pending = np.array(keep, dtype=np.int64)
-    rng = np.random.Generator(np.random.PCG64(rng_seed))
-    nb = table.shape[0]
-    for j in pending:
-        cur_fp, cur_b = fp[j], int(b1[j])
-        ok = False
-        for _ in range(500):
-            row = table[cur_b]
-            slot = np.flatnonzero(row == 0)
-            if len(slot):
-                row[slot[0]] = cur_fp
-                ok = True
-                break
-            s = int(rng.integers(table.shape[1]))
-            cur_fp, row[s] = row[s], cur_fp
-            cur_b = int((np.uint64(cur_b) ^ (np.uint64(cur_fp) * _FP_MIX)) & np.uint64(nb - 1))
-        if not ok:
-            return False
-    return True
-
-
 # ---------------- Sidecar files ----------------
 
 def sidecar_params(seen_capacity: int, n_buckets: int, bits_per_key: int) -> tuple[int, int, int]:
-    """(bloom_bytes, k, cuckoo_buckets) per bucket sidecar."""
+    """(bloom_bytes, k, 0) per bucket sidecar. The third slot is the retired
+    cuckoo tier's bucket count, kept so callers that unpack three values
+    (perfbench's traced replay) keep working."""
     per_bucket = max(seen_capacity // n_buckets, 1024)
-    m_bits = per_bucket * bits_per_key
-    bloom_bytes = (m_bits + 7) // 8
+    bloom_bytes = (per_bucket * bits_per_key + 7) // 8
     k = max(int(round(bits_per_key * 0.693)), 1)
-    nb = 1
-    while nb * 4 * 0.95 < per_bucket:
-        nb *= 2
-    return bloom_bytes, k, nb
+    return bloom_bytes, k, 0
 
 
-def load_sidecars(root: str, bucket: int, bloom_bytes: int, nb: int) -> tuple[np.ndarray, np.ndarray]:
-    bpath = os.path.join(root, "sidecars", f"bucket={bucket}", "bloom.npy")
-    cpath = os.path.join(root, "sidecars", f"bucket={bucket}", "cuckoo.npy")
-    bits = np.load(bpath) if os.path.exists(bpath) else np.zeros(bloom_bytes, dtype=np.uint8)
-    table = np.load(cpath) if os.path.exists(cpath) else np.zeros((nb, 4), dtype=np.uint16)
-    return bits, table
+def load_bloom(root: str, bucket: int, bloom_bytes: int) -> np.ndarray:
+    path = os.path.join(root, "sidecars", f"bucket={bucket}", "bloom.npy")
+    return np.load(path) if os.path.exists(path) else np.zeros(bloom_bytes, dtype=np.uint8)
 
 
-def save_sidecars(root: str, bucket: int, bits: np.ndarray, table: np.ndarray) -> None:
+def save_bloom(root: str, bucket: int, bits: np.ndarray) -> None:
     base = os.path.join(root, "sidecars", f"bucket={bucket}")
     os.makedirs(base, exist_ok=True)
-    for name, arr in (("bloom.npy", bits), ("cuckoo.npy", table)):
-        tmp = os.path.join(base, f".{name}.tmp{os.getpid()}.npy")
-        np.save(tmp, arr)
-        os.replace(tmp, os.path.join(base, name))
+    tmp = os.path.join(base, f".bloom.npy.tmp{os.getpid()}.npy")
+    np.save(tmp, bits)
+    os.replace(tmp, os.path.join(base, "bloom.npy"))
+
+
+# perfbench's traced replay (frozen) still reads the retired cuckoo tier
+# through these two names; they report what the engine now does — no filter
+# between the Bloom and the exact probe.
+
+def load_sidecars(root: str, bucket: int, bloom_bytes: int, nb: int) -> tuple[np.ndarray, None]:
+    """``(bits, table)`` of the former two-filter sidecar; ``table`` is
+    always None."""
+    return load_bloom(root, bucket, bloom_bytes), None
+
+
+def cuckoo_check(table, h: np.ndarray) -> np.ndarray:
+    """Pass-through: every key passes."""
+    return np.ones(len(h), dtype=bool)
 
 
 # ---------------- Spark-side operators ----------------
@@ -216,8 +158,8 @@ def filter_new(
     """Candidates (with url_hash, url_norm) → definitely-new candidates.
 
     ``mode="exact"``: plain left-anti join vs the seen table (truth baseline).
-    ``mode="tiered"``: bucket-grouped Bloom→cuckoo→pyarrow-probe; the seen
-    table is never shuffled.
+    ``mode="tiered"``: bucket-grouped Bloom → pyarrow-probe; the seen table is
+    never shuffled.
     """
     if mode == "exact":
         if seen_df is None:
@@ -228,7 +170,7 @@ def filter_new(
         return cands.join(seen_df.select("url_hash", "url_norm"),
                           ["url_hash", "url_norm"], "left_anti")
 
-    bloom_bytes, k, nb = sidecar_params(seen_capacity, n_buckets, bits_per_key)
+    bloom_bytes, k, _ = sidecar_params(seen_capacity, n_buckets, bits_per_key)
     cands = with_bucket(cands, n_buckets)
     schema = cands.schema
     paths = list(seen_paths)
@@ -241,7 +183,7 @@ def filter_new(
     # partition↔bucket when n_buckets == shuffle partitions, so each task
     # still touches ONE bucket's sidecars/files in the common case.
     def probe_frames(frames):
-        cache: dict[int, tuple[np.ndarray, np.ndarray]] = {}
+        cache: dict[int, np.ndarray] = {}
         for pdf in frames:
             if not len(pdf):
                 continue
@@ -250,12 +192,9 @@ def filter_new(
             for bucket, idx in pdf.groupby("bucket", sort=False).indices.items():
                 b = int(bucket)
                 if b not in cache:
-                    cache[b] = load_sidecars(warehouse_root, b, bloom_bytes, nb)
-                bits, table = cache[b]
+                    cache[b] = load_bloom(warehouse_root, b, bloom_bytes)
                 h = hall[idx]
-                maybe = bloom_check(bits, h, k)
-                if maybe.any():
-                    maybe[maybe] &= cuckoo_check(table, h[maybe])
+                maybe = bloom_check(cache[b], h, k)
                 if maybe.any():
                     files = []
                     for p in paths:
@@ -265,7 +204,7 @@ def filter_new(
                                       if f.endswith(".parquet")]
                     if files:
                         # hash-pruned read, then confirm on the full URL
-                        # string — tiers 1–3 by hash are prefilters;
+                        # string — the Bloom and the hash are prefilters;
                         # membership is by url_norm (the reference's
                         # _scanIndex keys on the URL itself)
                         ds = pads.dataset(files, format="parquet")
@@ -286,45 +225,6 @@ def filter_new(
     return cands.mapInPandas(probe_frames, schema=schema)
 
 
-def _cuckoo_resize_insert(table: np.ndarray, h: np.ndarray, bucket: int,
-                          warehouse_root: str,
-                          seen_paths: list[str] | None) -> np.ndarray:
-    """Cuckoo sidecar overflow recovery: grow the table (2× buckets per
-    attempt) and re-insert the bucket's authoritative hash set — streamed in
-    Arrow batches from the committed seen parquet (partial-key fingerprints
-    cannot be rehashed into a larger table, but the parquet IS the truth the
-    sidecars approximate) — plus the current batch. The reference's
-    ``_scanIndex`` hash map just grows; a 10^10-URL crawl launched with an
-    undersized ``seen_capacity`` must degrade the same way (resize + logged
-    warning), not die mid-round."""
-    import logging
-
-    files = []
-    for p in seen_paths or []:
-        d = os.path.join(p, f"bucket={bucket}")
-        if os.path.isdir(d):
-            files += [os.path.join(d, f) for f in os.listdir(d)
-                      if f.endswith(".parquet")]
-    nb = table.shape[0]
-    while True:
-        nb *= 2
-        new = np.zeros((nb, 4), dtype=np.uint16)
-        ok = True
-        if files:
-            ds = pads.dataset(files, format="parquet")
-            for b in ds.to_batches(columns=["url_hash"]):
-                if len(b) and not cuckoo_add(
-                        new, b.column("url_hash").to_numpy(zero_copy_only=False)):
-                    ok = False
-                    break
-        if ok and cuckoo_add(new, h):
-            logging.getLogger(__name__).warning(
-                "cuckoo sidecar bucket=%d resized %d -> %d buckets "
-                "(seen_capacity undersized for this crawl)",
-                bucket, table.shape[0], nb)
-            return new
-
-
 def register_new(
     new_df: DataFrame,
     warehouse_root: str,
@@ -332,32 +232,26 @@ def register_new(
     n_buckets: int,
     seen_capacity: int,
     bits_per_key: int,
-    seen_paths: list[str] | None = None,
-) -> int:
+) -> None:
     """Append the round's new URLs to the frontier/seen delta (bucket-
-    partitioned parquet) and OR them into the per-bucket sidecars — ONE job:
-    each bucket's task writes its parquet file (pyarrow, atomic tmp+rename)
-    and its sidecars together. The delta carries the FULL queued-row columns,
-    so it serves simultaneously as the frontier log (read by scheduling, seq-
-    pruned) and the url_seen table (read by the exact dedupe tier, column-
-    pruned to url_hash) — the reference's queue and ``_scanIndex`` share
-    entries the same way (``lib/queue.js:≈L90–145``). Idempotent under task
-    retry (bit-OR / slot-insert / file overwrite).
+    partitioned parquet) and OR them into the per-bucket Bloom sidecars — ONE
+    job: each bucket's task writes its parquet file (pyarrow, atomic
+    tmp+rename) and its Bloom together. The delta carries the FULL queued-row
+    columns, so it serves simultaneously as the frontier log (read by
+    scheduling, seq-pruned) and the url_seen table (read by the exact dedupe
+    tier, column-pruned to url_hash) — the reference's queue and
+    ``_scanIndex`` share entries the same way (``lib/queue.js:≈L90–145``).
+    Idempotent under task retry (bit-OR / file overwrite).
 
     Arrow-native: ``repartition(bucket) + mapInArrow`` instead of
     ``groupBy().applyInPandas`` — no sort-based grouping, no Arrow→pandas→
     Arrow round trip (this pass was ~5 s of the per-round serial floor in
     the round-2 profile). Hash partitioning sends each bucket value to
     exactly ONE task, preserving single-writer sidecar exclusivity; a task
-    that receives several buckets handles them per-bucket.
-
-    Cuckoo overflow (undersized ``seen_capacity``) triggers an in-task
-    auto-resize from the authoritative parquet (``seen_paths`` — see
-    :func:`_cuckoo_resize_insert`) instead of failing the round; returns the
-    number of buckets resized so the engine can log it."""
+    that receives several buckets handles them per-bucket."""
     import pyarrow as pa
 
-    bloom_bytes, k, nb = sidecar_params(seen_capacity, n_buckets, bits_per_key)
+    bloom_bytes, k, _ = sidecar_params(seen_capacity, n_buckets, bits_per_key)
     delta = with_bucket(new_df, n_buckets) if "bucket" not in new_df.columns else new_df
     data_cols = [c for c in delta.columns if c != "bucket"]
 
@@ -370,52 +264,36 @@ def register_new(
             for bu in np.unique(buckets):
                 per.setdefault(int(bu), []).append(
                     b.filter(pa.array(buckets == bu)))
-        out_b, out_n, out_rs = [], [], []
         for bu, blist in per.items():
             tbl = pa.Table.from_batches(blist).select(data_cols).sort_by("seq")
             h = tbl.column("url_hash").to_numpy()
-            bits, table = load_sidecars(warehouse_root, bu, bloom_bytes, nb)
+            bits = load_bloom(warehouse_root, bu, bloom_bytes)
             bloom_add(bits, h, k)
-            resized = False
-            if not cuckoo_add(table, h):
-                table = _cuckoo_resize_insert(table, h, bu, warehouse_root,
-                                              seen_paths)
-                resized = True
-            save_sidecars(warehouse_root, bu, bits, table)
+            save_bloom(warehouse_root, bu, bits)
             bdir = os.path.join(seen_round_dir, f"bucket={bu}")
             os.makedirs(bdir, exist_ok=True)
             out = os.path.join(bdir, "part-0.parquet")
             tmp = out + f".tmp{os.getpid()}"
             pq.write_table(tbl, tmp)
             os.replace(tmp, out)
-            out_b.append(bu)
-            out_n.append(len(h))
-            out_rs.append(resized)
-        if out_b:
-            yield pa.RecordBatch.from_pydict(
-                {"bucket": pa.array(out_b, pa.int32()),
-                 "n": pa.array(out_n, pa.int64()),
-                 "resized": pa.array(out_rs, pa.bool_())})
+        if per:
+            yield pa.RecordBatch.from_pydict({"bucket": pa.array(list(per), pa.int32())})
 
-    rows = (
-        delta.repartition(n_buckets, F.col("bucket"))
-        .mapInArrow(update_stream, schema="bucket int, n long, resized boolean")
-        .collect()
-    )
+    delta.repartition(n_buckets, F.col("bucket")) \
+        .mapInArrow(update_stream, schema="bucket int").collect()
     # _SUCCESS marker so Spark's recursive reads treat the dir normally
     os.makedirs(seen_round_dir, exist_ok=True)
     open(os.path.join(seen_round_dir, "_SUCCESS"), "w").close()
-    return sum(1 for r in rows if r["resized"])
 
 
 def rebuild_sidecars(spark, warehouse_root: str, seen: DataFrame | None,
                      n_buckets: int, seen_capacity: int, bits_per_key: int,
                      buckets: list[int] | None = None) -> None:
-    """Resume path: reconstruct sidecars from the committed seen table
-    (compacted levels + deltas — caller passes the union read; crash between
-    sidecar update and manifest commit leaves stale bits — rebuilding
-    restores FPR hygiene; stale-AHEAD bits are false-positive-only, tier-3's
-    exact parquet probe keeps membership exact regardless).
+    """Resume path: reconstruct the Bloom sidecars from the committed seen
+    table (compacted levels + deltas — caller passes the union read; crash
+    between sidecar update and manifest commit leaves stale bits — rebuilding
+    restores FPR hygiene; stale-AHEAD bits are false-positive-only, the exact
+    parquet probe keeps membership exact regardless).
 
     ``buckets=None`` rebuilds everything (wipes the sidecar dir). A bucket
     list SCOPES the rebuild: only those buckets' sidecar dirs are wiped and
@@ -425,77 +303,49 @@ def rebuild_sidecars(spark, warehouse_root: str, seen: DataFrame | None,
     resume runs ZERO rebuild jobs instead of a full O(corpus) scan per
     resume (round-4 verdict "What's wrong" #2).
 
-    Streaming ``mapInArrow`` over (bucket, url_hash) only — per-task memory
-    is O(sidecar bytes per bucket + one Arrow batch) at ANY bucket size,
-    never a whole-bucket pandas frame (round-3 verdict scale-killer #3; the
-    old ``groupBy.applyInPandas`` held O(10^8) rows per task at the design
-    point). Bloom/cuckoo inserts are per-batch incremental (idempotent), so
-    no hash accumulation is needed. If a bucket's cuckoo table overflows
-    (resume after an undersized ``seen_capacity``), the driver doubles the
-    capacity and rebuilds again — mirroring :func:`register_new`'s in-crawl
-    auto-resize, at worst log₂(true/configured capacity) cheap passes."""
-    import logging
+    One streaming ``mapInArrow`` pass over (bucket, url_hash) only —
+    per-task memory is O(Bloom bytes per bucket + one Arrow batch) at ANY
+    bucket size, never a whole-bucket pandas frame (round-3 verdict
+    scale-killer #3). Bloom inserts are per-batch incremental (bit-OR), so no
+    hash accumulation is needed, and a Bloom never overflows: more keys than
+    ``seen_capacity`` only raise its false-pass rate."""
     import shutil
 
     import pyarrow as pa
 
     if buckets is not None and not buckets:
         return
-    if seen is not None:
-        seen = seen.select("bucket", "url_hash")
-        if buckets is not None:
-            seen = seen.where(F.col("bucket").isin([int(b) for b in buckets]))
-    cap = max(int(seen_capacity), 1)
-    for _attempt in range(16):
-        scdir = os.path.join(warehouse_root, "sidecars")
-        if buckets is None:
-            if os.path.isdir(scdir):
-                shutil.rmtree(scdir)
-        else:
-            for b in buckets:
-                bdir = os.path.join(scdir, f"bucket={int(b)}")
-                if os.path.isdir(bdir):
-                    shutil.rmtree(bdir)
-        os.makedirs(scdir, exist_ok=True)
-        if seen is None:
-            return
-        bloom_bytes, k, nb = sidecar_params(cap, n_buckets, bits_per_key)
+    scdir = os.path.join(warehouse_root, "sidecars")
+    if buckets is None:
+        if os.path.isdir(scdir):
+            shutil.rmtree(scdir)
+    else:
+        for b in buckets:
+            bdir = os.path.join(scdir, f"bucket={int(b)}")
+            if os.path.isdir(bdir):
+                shutil.rmtree(bdir)
+    os.makedirs(scdir, exist_ok=True)
+    if seen is None:
+        return
+    seen = seen.select("bucket", "url_hash")
+    if buckets is not None:
+        seen = seen.where(F.col("bucket").isin([int(b) for b in buckets]))
+    bloom_bytes, k, _ = sidecar_params(seen_capacity, n_buckets, bits_per_key)
 
-        def update_stream(batches, _bb=bloom_bytes, _k=k, _nb=nb):
-            # bucket -> [bloom bits, cuckoo table, rows, overflowed]
-            state: dict[int, list] = {}
-            for b in batches:
-                if not len(b):
-                    continue
-                buckets = b.column("bucket").to_numpy(zero_copy_only=False)
-                hashes = b.column("url_hash").to_numpy(zero_copy_only=False)
-                for bu in np.unique(buckets):
-                    h = hashes[buckets == bu]
-                    st = state.setdefault(int(bu), [
-                        np.zeros(_bb, dtype=np.uint8),
-                        np.zeros((_nb, 4), dtype=np.uint16), 0, False])
-                    bloom_add(st[0], h, _k)
-                    if not st[3] and not cuckoo_add(st[1], h):
-                        st[3] = True  # report; driver retries at 2× capacity
-                    st[2] += len(h)
-            for bu, st in state.items():
-                if not st[3]:
-                    save_sidecars(warehouse_root, bu, st[0], st[1])
-            if state:
-                yield pa.RecordBatch.from_pydict(
-                    {"bucket": pa.array(list(state), pa.int32()),
-                     "n": pa.array([s[2] for s in state.values()], pa.int64()),
-                     "overflow": pa.array([s[3] for s in state.values()],
-                                          pa.bool_())})
+    def update_stream(batches):
+        blooms: dict[int, np.ndarray] = {}
+        for b in batches:
+            if not len(b):
+                continue
+            bucket_col = b.column("bucket").to_numpy(zero_copy_only=False)
+            hashes = b.column("url_hash").to_numpy(zero_copy_only=False)
+            for bu in np.unique(bucket_col):
+                bits = blooms.setdefault(int(bu), np.zeros(bloom_bytes, dtype=np.uint8))
+                bloom_add(bits, hashes[bucket_col == bu], k)
+        for bu, bits in blooms.items():
+            save_bloom(warehouse_root, bu, bits)
+        if blooms:
+            yield pa.RecordBatch.from_pydict({"bucket": pa.array(list(blooms), pa.int32())})
 
-        rows = (seen.repartition(n_buckets, F.col("bucket"))
-                .mapInArrow(update_stream, schema="bucket int, n long, overflow boolean")
-                .collect())
-        bad = [r["bucket"] for r in rows if r["overflow"]]
-        if not bad:
-            return
-        cap *= 2
-        logging.getLogger(__name__).warning(
-            "sidecar rebuild: cuckoo overflow in bucket(s) %s — retrying at "
-            "seen_capacity=%d", bad[:8], cap)
-    raise RuntimeError("sidecar rebuild failed to converge on a capacity")
+    seen.repartition(n_buckets, F.col("bucket")) \
+        .mapInArrow(update_stream, schema="bucket int").collect()

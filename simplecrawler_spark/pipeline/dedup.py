@@ -119,7 +119,12 @@ def _uncompressed_input_bytes(df: DataFrame, max_files: int = 64) -> int | None:
 # broadcast the per-doc verify relation (gram-hash sets / packed
 # fingerprints) when its estimated in-memory size fits comfortably; above
 # the cap the verify join falls back to the planner's shuffle strategy.
-# Overridable for small-executor deployments (bytes).
+# Overridable for small-executor deployments (bytes). On the arrow verify
+# path the broadcast is a Python broadcast, deserialized once per Python
+# worker process rather than shared per executor, so its RSS scales with the
+# number of cores: at the full cap (~256 MB of numpy arrays) an 8-core
+# executor can hold ~2 GB more. Small-memory deployments should lower the cap
+# or set SPARK_GRAFT_VERIFY_ARROW=0 (the JVM join path).
 _VERIFY_BROADCAST_CAP = int(os.environ.get(
     "SPARK_GRAFT_VERIFY_BROADCAST_CAP", str(512 << 20)))
 
@@ -345,7 +350,13 @@ def minhash_oph_pairs(docs: DataFrame, threshold: float = 0.5, n: int = 5,
     linear in corpus text volume, one shuffle keyed by (doc, bucket), then
     the LSH band equi-join (hot buckets capped via
     :func:`drop_hot_buckets`). Candidates get an exact distinct-gram Jaccard
-    verify (gram equi-join restricted to candidate pairs only)."""
+    verify (gram equi-join restricted to candidate pairs only).
+
+    Not fully lazy: on the arrow verify path (bigint ids, a per-doc relation
+    above ``SPARK_GRAFT_VERIFY_ARROW_MIN_BYTES`` and under the broadcast cap)
+    building the returned DataFrame already runs a Spark job and collects the
+    per-doc gram-hash sets to the driver, so construction alone can take time
+    or fail (e.g. on ``spark.driver.maxResultSize``) before any action."""
     bands = num_buckets // rows_per_band
     # the gram explode + md5 is the expensive linear scan, and it feeds TWO
     # consumers (the signature aggregation and the per-doc verify-set

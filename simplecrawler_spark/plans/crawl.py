@@ -9,7 +9,7 @@ Round R (SURVEY.md §3.1 Spark lifecycle):
   4. discovery: clean+canonicalize links (F2/F3 pandas UDF, fast-path
      vectorized) + redirect re-entry (J5, link_idx 0, depth+1 per A.3).
   5. admission gates in A.2 order → reject counters (one pass).
-  6. dedupe: in-batch first-wins window + Bloom→cuckoo→exact seen tiers (J1).
+  6. dedupe: in-batch first-wins window + Bloom→exact seen tiers (J1).
   7. deterministic ``seq`` assignment (Appendix C) → queued delta; seen
      delta + sidecar update; metrics append; **atomic manifest commit**.
 
@@ -482,15 +482,9 @@ class CrawlEngine:
                 "host", F.regexp_extract("url_norm", _HOST_RE, 1))
             queued = restored.withColumn("round_queued", F.lit(rnd)).select(*self._queued_cols, "round_queued")
             if cfg.dedupe_mode == "tiered":
-                n_resized = dd.register_new(
+                dd.register_new(
                     queued, self.wh.root, self.wh.round_dir("seen", rnd),
-                    cfg.n_buckets, cfg.seen_capacity, cfg.bloom_bits_per_key,
-                    seen_paths=seen_paths)
-                if n_resized:
-                    _LOG.warning(
-                        "round %d: %d cuckoo sidecar bucket(s) auto-resized — "
-                        "seen_capacity=%d is undersized for this crawl",
-                        rnd, n_resized, cfg.seen_capacity)
+                    cfg.n_buckets, cfg.seen_capacity, cfg.bloom_bits_per_key)
             else:
                 dd.with_bucket(queued, cfg.n_buckets) \
                     .write.mode("overwrite").partitionBy("bucket").parquet(self.wh.round_dir("seen", rnd))
@@ -805,7 +799,7 @@ class CrawlEngine:
 
     def _sidecar_manifest(self) -> dict:
         """Snapshot record making the sidecars part of the committed state:
-        after this manifest lands, every bucket's bloom/cuckoo files reflect
+        after this manifest lands, every bucket's Bloom file reflects
         exactly the committed seen table at these params (register_new
         updates sidecars BEFORE the commit), so a resume that finds the
         record intact can skip the rebuild entirely."""
@@ -820,10 +814,10 @@ class CrawlEngine:
         params changed between runs). Otherwise the union of
 
         * buckets touched by ORPHAN seen deltas (a crashed round's
-          register_new set stale-ahead bits / may have auto-resized a cuckoo
-          table — false-positive-only, but rebuilt for FPR hygiene), and
-        * buckets present in the committed seen layout whose sidecar files
-          are missing (poisoned/partially-copied warehouse — skipping those
+          register_new set stale-ahead bits — false-positive-only, but
+          rebuilt for FPR hygiene), and
+        * buckets present in the committed seen layout whose Bloom file is
+          missing (poisoned/partially-copied warehouse — skipping those
           would cause FALSE NEGATIVES).
 
         An empty list = zero rebuild jobs: the common clean-shutdown resume
@@ -831,7 +825,7 @@ class CrawlEngine:
         the unconditional rebuild was O(corpus) per resume). Residual FPR
         caveat, documented: a crash in the sliver between a bucket's sidecar
         save and its parquet rename leaves stale-ahead bits with no orphan
-        bucket dir to flag them — tier-3's exact probe keeps membership
+        bucket dir to flag them — the exact probe keeps membership
         exact, so this costs only false-positive rate, never correctness."""
         import re as _re
 
@@ -848,10 +842,8 @@ class CrawlEngine:
                 bm = _re.fullmatch(r"bucket=(\d+)", name)
                 if bm:
                     need.add(int(bm.group(1)))
-        missing = {
-            b for b in need
-            if not (os.path.exists(self.wh.sidecar_path(b, "bloom"))
-                    and os.path.exists(self.wh.sidecar_path(b, "cuckoo")))}
+        missing = {b for b in need
+                   if not os.path.exists(self.wh.sidecar_path(b, "bloom"))}
         return sorted(orphan_buckets | missing)
 
     def _orphan_seen_buckets(self, committed_round: int) -> set[int]:

@@ -19,7 +19,7 @@ Layout under ``warehouse/``::
     fetched/round=R/    fetch outcomes (delta per round; crawl-order record)
     seen/round=R/bucket=B/   url_seen delta, hash-bucketed
     metrics/round=R/    per-partition event counters
-    sidecars/bucket=B/  bloom.npy + cuckoo.npy membership tiers — committed
+    sidecars/bucket=B/  bloom.npy membership prefilter — committed
                         state (updated before each manifest lands; resume
                         rebuilds only crash-touched or missing buckets)
     manifests/manifest-R.json   atomic commit point, parent pointer = lineage

@@ -5,6 +5,8 @@ denials, depth limits, domain filters, and per-host politeness budgets."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -496,13 +498,11 @@ def test_parity_cookie_accumulation(spark, tmp_path_factory, tmp_path):
         map(tuple, oresult.jar.to_rows()))
 
 
-def test_parity_tiered_with_undersized_capacity_auto_resizes(spark, tmp_path_factory, tmp_path):
-    """A crawl launched with seen_capacity ~8× too small must COMPLETE (the
-    cuckoo sidecar auto-resizes from the authoritative parquet instead of
-    raising mid-round — the reference's _scanIndex hash map just grows) with
-    tiered ≡ oracle parity intact and at least one resized sidecar on disk."""
-    import numpy as np
-
+def test_parity_tiered_with_undersized_capacity(spark, tmp_path_factory, tmp_path):
+    """A crawl launched with seen_capacity ~8× too small must COMPLETE with
+    tiered ≡ oracle parity intact: the saturated Bloom passes more keys to
+    the exact probe, which still decides every one (the reference's
+    _scanIndex hash map just grows). Only Bloom sidecars are written."""
     d = str(tmp_path_factory.mktemp("corpus_resize"))
     p = CorpusParams(n_urls=4000, n_hosts=6, seed=43)
     write_corpus(spark, d, p)
@@ -511,8 +511,4 @@ def test_parity_tiered_with_undersized_capacity_auto_resizes(spark, tmp_path_fac
                       seen_capacity=1024, n_buckets=1, max_rounds=500)
     result, oresult = _run_both(spark, d, cfg, tmp_path)
     _assert_parity(spark, result, oresult)
-    from simplecrawler_spark.operators.dedupe import sidecar_params
-
-    _, _, nb0 = sidecar_params(1024, 1, cfg.bloom_bits_per_key)
-    table = np.load(f"{cfg.warehouse}/sidecars/bucket=0/cuckoo.npy")
-    assert table.shape[0] > nb0, "expected >=1 logged cuckoo auto-resize"
+    assert os.listdir(f"{cfg.warehouse}/sidecars/bucket=0") == ["bloom.npy"]

@@ -1,7 +1,7 @@
 """S4/S5 resume semantics: a crawl interrupted between rounds, resumed from
 the last committed manifest, must produce byte-identical final tables —
-including dropping orphan (uncommitted) round dirs and rebuilding bloom/
-cuckoo sidecars (SURVEY.md §3.3; north_rule resumability clause)."""
+including dropping orphan (uncommitted) round dirs and rebuilding Bloom
+sidecars (SURVEY.md §3.3; north_rule resumability clause)."""
 
 from __future__ import annotations
 
