@@ -23,6 +23,18 @@ def corpus(spark, tmp_path_factory):
     return d
 
 
+@pytest.fixture(scope="module")
+def plain(spark, corpus, tmp_path_factory):
+    """The uninterrupted delta-only crawl (compact_every=0): the reference
+    that every compacted, interrupted or resumed run must reproduce. Module
+    scoped: it is a 50+ round crawl, the suite's most expensive reference."""
+    web = spark.read.parquet(f"{corpus}/web")
+    robots = spark.read.parquet(f"{corpus}/robots")
+    wh = str(tmp_path_factory.mktemp("compact_plain") / "wh_plain")
+    res = CrawlEngine(spark, _cfg(wh, compact_every=0), web, robots=robots).run()
+    return wh, res, _tables(spark, res)
+
+
 def _cfg(wh, **kw):
     base = dict(seeds=["http://host0.example/p/0"], budget=8, dedupe_mode="tiered",
                 seen_capacity=50_000, n_buckets=4, filter_by_domain=False,
@@ -52,26 +64,25 @@ def _dir_counts(wh):
     return out
 
 
-def test_long_crawl_bounded_files_and_identical_results(spark, corpus, tmp_path):
+def test_long_crawl_bounded_files_and_identical_results(spark, corpus, plain, tmp_path):
     """≥50-round crawl: with compact_every=8/max_levels=2 the per-table dir
     count stays ≤ levels+K while the delta-only run accumulates one dir per
     round; results are byte-identical; major compactions provably ran."""
     web = spark.read.parquet(f"{corpus}/web")
     robots = spark.read.parquet(f"{corpus}/robots")
+    plain_wh, plain_res, plain_tables = plain
 
-    plain = CrawlEngine(spark, _cfg(str(tmp_path / "wh_plain"), compact_every=0),
-                        web, robots=robots).run()
     comp = CrawlEngine(spark, _cfg(str(tmp_path / "wh_comp"), compact_every=8,
                                    compact_max_levels=2), web, robots=robots).run()
     assert comp.rounds >= 50, f"corpus/budget drifted: only {comp.rounds} rounds"
-    assert _tables(spark, plain) == _tables(spark, comp)
-    assert plain.events == comp.events
+    assert plain_tables == _tables(spark, comp)
+    assert plain_res.events == comp.events
 
     counts = _dir_counts(str(tmp_path / "wh_comp"))
     for t, c in counts.items():
         assert c["levels"] <= 2, (t, c)
         assert c["rounds"] <= 8 + 1, (t, c)   # deltas since the last level
-    plain_counts = _dir_counts(str(tmp_path / "wh_plain"))
+    plain_counts = _dir_counts(plain_wh)
     # zero-admission rounds write no seen delta, so allow a little slack
     assert plain_counts["seen"]["rounds"] > 40  # what compaction prevents
 
@@ -87,18 +98,17 @@ def test_long_crawl_bounded_files_and_identical_results(spark, corpus, tmp_path)
             assert len(files) == 1, (lv, b, files)
 
 
-def test_kill_resume_across_compaction(spark, corpus, tmp_path):
+def test_kill_resume_across_compaction(spark, corpus, plain, tmp_path):
     """Stop exactly at a compaction commit, simulate crash debris (orphan
     round dirs, an unreferenced compact level, a tmp work dir, a destroyed
-    sidecar), resume — final tables byte-identical to an uninterrupted run
-    with the same compaction config. Sidecar rebuild reads compacted data."""
+    sidecar), resume — final tables byte-identical to the uninterrupted
+    delta-only run (compaction never changes a table, so that is also the
+    uninterrupted run with this compaction config). Sidecar rebuild reads
+    compacted data."""
     web = spark.read.parquet(f"{corpus}/web")
     robots = spark.read.parquet(f"{corpus}/robots")
     kw = dict(compact_every=6, compact_max_levels=2)
-
-    full = CrawlEngine(spark, _cfg(str(tmp_path / "wh_cfull"), **kw),
-                       web, robots=robots).run()
-    want = _tables(spark, full)
+    want = plain[2]
 
     wh = str(tmp_path / "wh_cpart")
     CrawlEngine(spark, _cfg(wh, max_rounds=12, **kw), web, robots=robots).run()

@@ -37,15 +37,21 @@ def _tables(spark, result):
     return sorted(log), seen
 
 
-def test_kill_and_resume_identical(spark, corpus, tmp_path, monkeypatch):
+@pytest.fixture(scope="module")
+def reference(spark, corpus, tmp_path_factory):
+    """Tables of the uninterrupted crawl every resumed run must reproduce."""
+    web = spark.read.parquet(f"{corpus}/web")
+    robots = spark.read.parquet(f"{corpus}/robots")
+    wh = str(tmp_path_factory.mktemp("resume_ref") / "wh_full")
+    return _tables(spark, CrawlEngine(spark, _cfg(wh), web, robots=robots).run())
+
+
+def test_kill_and_resume_identical(spark, corpus, reference, tmp_path, monkeypatch):
     from simplecrawler_spark.operators import dedupe as dd
 
     web = spark.read.parquet(f"{corpus}/web")
     robots = spark.read.parquet(f"{corpus}/robots")
-
-    # uninterrupted reference run
-    full = CrawlEngine(spark, _cfg(str(tmp_path / "wh_full")), web, robots=robots).run()
-    want = _tables(spark, full)
+    want = reference
 
     # interrupted: stop after 3 rounds ("kill"), then resume to completion
     eng1 = CrawlEngine(spark, _cfg(str(tmp_path / "wh_part"), max_rounds=3), web, robots=robots)
@@ -83,7 +89,7 @@ def test_kill_and_resume_identical(spark, corpus, tmp_path, monkeypatch):
     assert got == want
 
 
-def test_clean_resume_runs_zero_rebuild_jobs(spark, corpus, tmp_path, monkeypatch):
+def test_clean_resume_runs_zero_rebuild_jobs(spark, corpus, reference, tmp_path, monkeypatch):
     """A resume from a clean shutdown (manifest committed, no orphans, all
     sidecars present) must not rebuild ANY sidecar — at the design point the
     unconditional rebuild was a full seen-table scan per resume. The
@@ -91,19 +97,18 @@ def test_clean_resume_runs_zero_rebuild_jobs(spark, corpus, tmp_path, monkeypatc
     from simplecrawler_spark.operators import dedupe as dd
 
     web = spark.read.parquet(f"{corpus}/web")
-    full = CrawlEngine(spark, _cfg(str(tmp_path / "wh_f2")), web).run()
-    want = _tables(spark, full)
+    robots = spark.read.parquet(f"{corpus}/robots")
 
     wh_root = str(tmp_path / "wh_clean")
-    CrawlEngine(spark, _cfg(wh_root, max_rounds=3), web).run()
+    CrawlEngine(spark, _cfg(wh_root, max_rounds=3), web, robots=robots).run()
 
     def forbid(*a, **kw):
         raise AssertionError("sidecar rebuild ran on a clean resume")
 
     monkeypatch.setattr(dd, "rebuild_sidecars", forbid)
-    eng2 = CrawlEngine(spark, _cfg(wh_root), web)
+    eng2 = CrawlEngine(spark, _cfg(wh_root), web, robots=robots)
     resumed = eng2.run(resume=True)
-    assert _tables(spark, resumed) == want
+    assert _tables(spark, resumed) == reference
 
 
 def test_lineage_chain_intact(spark, corpus, tmp_path):

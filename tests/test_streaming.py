@@ -40,6 +40,16 @@ def small_corpus(spark, tmp_path_factory):
     return d
 
 
+@pytest.fixture(scope="module")
+def batch_fixpoint(spark, small_corpus, tmp_path_factory):
+    """Fetched log and event totals of the batch crawl run to its fixpoint —
+    what every completed stream must reproduce."""
+    web = spark.read.parquet(f"{small_corpus}/web")
+    wh = str(tmp_path_factory.mktemp("stream_batch") / "wh_b")
+    res = CrawlEngine(spark, _cfg(wh), web).run()
+    return _fetched_key(res, spark), _event_totals(res, spark)
+
+
 def test_stream_rounds_match_batch(spark, small_corpus, tmp_path):
     web = spark.read.parquet(f"{small_corpus}/web")
 
@@ -59,33 +69,33 @@ def test_stream_rounds_match_batch(spark, small_corpus, tmp_path):
     assert _fetched_key(batch_res, spark) == _fetched_key(stream_res, spark)
 
 
-def test_stream_completion_matches_batch_fixpoint(spark, small_corpus, tmp_path):
+def test_stream_completion_matches_batch_fixpoint(spark, small_corpus, batch_fixpoint,
+                                                 tmp_path):
     """A4 analog: the stream detects the drained frontier, writes the same
     `complete` metrics row the batch epilogue writes, and await_completion
     terminates the query — final fetched log AND event totals identical."""
     web = spark.read.parquet(f"{small_corpus}/web")
-
-    batch_res = CrawlEngine(spark, _cfg(str(tmp_path / "wh_b")), web).run()
+    batch_key, ev_b = batch_fixpoint
 
     eng = CrawlEngine(spark, _cfg(str(tmp_path / "wh_s")), web)
     h = stream_crawl(spark, eng, tick_seconds=0.2)
     stream_res = h.await_completion(timeout=300)
     assert h.complete and not h.query.isActive
 
-    assert _fetched_key(batch_res, spark) == _fetched_key(stream_res, spark)
-    ev_b, ev_s = _event_totals(batch_res, spark), _event_totals(stream_res, spark)
+    assert batch_key == _fetched_key(stream_res, spark)
+    ev_s = _event_totals(stream_res, spark)
     assert ev_b == ev_s
     assert ev_s.get("complete") == 1
 
 
-def test_stream_restart_resumes_from_snapshot(spark, small_corpus, tmp_path):
+def test_stream_restart_resumes_from_snapshot(spark, small_corpus, batch_fixpoint,
+                                             tmp_path):
     """Restart supervision: kill the query after a couple of rounds, start a
     NEW query + engine on the same warehouse — it defrosts (S5) instead of
     reseeding, and the completed crawl is byte-identical to the batch run."""
     web = spark.read.parquet(f"{small_corpus}/web")
     wh = str(tmp_path / "wh_restart")
-
-    batch_res = CrawlEngine(spark, _cfg(str(tmp_path / "wh_b2")), web).run()
+    batch_key, batch_events = batch_fixpoint
 
     eng1 = CrawlEngine(spark, _cfg(wh), web)
     h1 = stream_crawl(spark, eng1, tick_seconds=0.2, max_rounds=2)
@@ -102,10 +112,10 @@ def test_stream_restart_resumes_from_snapshot(spark, small_corpus, tmp_path):
     stream_res = h2.await_completion(timeout=300)
     assert stream_res.rounds > first_leg  # it resumed, not restarted
 
-    assert _fetched_key(batch_res, spark) == _fetched_key(stream_res, spark)
+    assert batch_key == _fetched_key(stream_res, spark)
     # crawlstart must appear exactly once (seeding never re-ran)
     assert _event_totals(stream_res, spark).get("crawlstart") == 1
-    assert _event_totals(stream_res, spark) == _event_totals(batch_res, spark)
+    assert _event_totals(stream_res, spark) == batch_events
 
 
 def test_stream_pause_resume(spark, small_corpus, tmp_path):
