@@ -1,8 +1,8 @@
 #!/usr/bin/env python
 """Data-plane scaling evidence #2: the operator suite (content dedup +
-similarity + text analysis — single wide jobs, no round barriers) at two
-pinned parallelism levels. Complements bench/scaling.py (the BSP crawl,
-which at sandbox round sizes is stage-latency-bound; see BENCH.md analysis).
+similarity + text analysis) at two pinned parallelism levels. These are
+single wide jobs with no round barriers, unlike the BSP crawl, which at
+sandbox round sizes is stage-latency-bound (see BENCH.md analysis).
 
     python bench/ops_scaling.py              # sf0.1, cores 2 then 8
     python bench/ops_scaling.py --factor 10  # 10x synthetic corpus cell:

@@ -3,7 +3,7 @@
 (north_rule: pure-Python deployability — no jars, no native code).
 
     python bench/package.py
-    spark-submit --py-files dist/engine.zip bench/run_crawl.py --cores 8 ...
+    spark-submit --py-files dist/engine.zip your_job.py  # imports simplecrawler_spark
 """
 
 from __future__ import annotations

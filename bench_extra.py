@@ -1,18 +1,13 @@
 #!/usr/bin/env python
 """Round-6 optimization measurement harness (guide §1) — separate from the
-FROZEN ``bench.py`` driver contract.
+FROZEN ``bench.py`` driver contract. Prints one JSON line, like bench.py.
 
-Modes (one JSON line each, like bench.py):
-
-* ``--query NAME`` — time ONE operator query from ``__spark_entry__`` in a
-  fresh session with the exact bench protocol (cold single run, timed window
-  = DataFrame construction + noop-sink write, AQE on, shuffle partitions =
-  cores). ``--explain PATH`` additionally writes ``.explain("formatted")``
-  of the constructed DataFrame (the plans/r06 evidence files).
-* ``--crawl`` — time the crawl exactly as bench.py does (same corpus cache,
-  same CrawlConfig, AQE off, cold) with ``--referrer-in-delta`` flipping the
-  delta layout — the serialized v1-vs-v2 ABA cell VERDICT.md item 1 asks
-  for. Run alternately from a driver shell, fresh JVM per run.
+``--query NAME`` times ONE operator query from ``__spark_entry__`` in a
+fresh session with the exact bench protocol (cold single run, timed window
+= DataFrame construction + noop-sink write, AQE on, shuffle partitions =
+cores). ``--explain PATH`` additionally writes ``.explain("formatted")`` of
+the constructed DataFrame (the plans/r06 evidence files). The crawl is
+measured by ``perfbench/run.py``.
 
 Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS — same contract as bench.py.
 """
@@ -57,51 +52,14 @@ def run_query(name: str, explain_path: str | None, no_run: bool = False) -> None
                       "sf_dir": SF_DIR, "cpus": CPUS}))
 
 
-def run_crawl(referrer_in_delta: bool) -> None:
-    from simplecrawler_spark.session import get_spark
-    from simplecrawler_spark.config import CrawlConfig
-    from simplecrawler_spark.plans.crawl import run_crawl as _run
-    import bench as bench_mod
-    import shutil
-    import tempfile
-
-    spark = get_spark(app="bench-extra-crawl", master=f"local[{CPUS}]",
-                      shuffle_partitions=CPUS)
-    spark.sparkContext.setLogLevel("ERROR")
-    corpus_dir, p = bench_mod.bench_corpus_dir(spark, bench_mod.CRAWL_URLS)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    wh = tempfile.mkdtemp(prefix="bench_wh_")
-    cfg = CrawlConfig(
-        seeds=["http://host0.example/p/0"], budget=bench_mod.BUDGET,
-        filter_by_domain=False, dedupe_mode="tiered",
-        seen_capacity=max(bench_mod.CRAWL_URLS * 2, 200_000), n_buckets=32,
-        shuffle_partitions=CPUS, warehouse=wh, max_rounds=200,
-        referrer_in_delta=referrer_in_delta,
-    )
-    t0 = time.time()
-    res = _run(spark, cfg, corpus_dir, corpus_params=p)
-    n = sum(m.get("batch", 0) for m in res.warehouse.lineage(res.rounds))
-    dt = time.time() - t0
-    shutil.rmtree(wh, ignore_errors=True)
-    print(json.dumps({
-        "cell": "crawl_bsp_fixpoint", "layout": ("v1" if referrer_in_delta else "v2"),
-        "seconds": round(dt, 3), "urls": int(n),
-        "urls_per_sec": round(n / dt, 1), "rounds": res.rounds, "cpus": CPUS}))
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--query")
+    ap.add_argument("--query", required=True)
     ap.add_argument("--explain")
-    ap.add_argument("--crawl", action="store_true")
-    ap.add_argument("--referrer-in-delta", action="store_true")
     ap.add_argument("--no-run", action="store_true",
                     help="construct + explain only (plan capture)")
     args = ap.parse_args()
-    if args.crawl:
-        run_crawl(args.referrer_in_delta)
-    else:
-        run_query(args.query, args.explain, no_run=args.no_run)
+    run_query(args.query, args.explain, no_run=args.no_run)
 
 
 if __name__ == "__main__":

@@ -163,12 +163,6 @@ class CrawlConfig:
                                            # per-task zip-archive re-reads that
                                            # worker_daemon removes; ~70 ms remain
                                            # (identity mapInArrow, 4-core box)
-    # delta schema version (plans/crawl.QUEUED_COLS note): False (v2,
-    # default) derives `referrer` from parent_seq at read time — the
-    # candidate exchanges and seen/fetched deltas are ~45 B/row narrower;
-    # True (v1) stores it inline. A resumed warehouse must keep the layout
-    # it was started with (resume_state validates).
-    referrer_in_delta: bool = False
     dedupe_mode: str = "tiered"            # "exact" | "tiered" (bloom → exact probe)
     bloom_bits_per_key: int = 16           # k = 11; ~0.07% false passes at full load
     # sizes the per-bucket Bloom sidecars; an undersized capacity saturates

@@ -283,11 +283,10 @@ def build_request_headers(batch: DataFrame, cfg: CrawlConfig,
         out = out.withColumn("hdr_cookie", cookie_header_udf(rows)(F.col("host"), path))
     else:
         out = out.withColumn("hdr_cookie", F.lit(None).cast("string"))
-    # Referer: the discovering page (queueItem.referrer); seeds have none
-    out = out.withColumn(
-        "hdr_referer",
-        F.col("referrer") if "referrer" in batch.columns
-        else F.lit(None).cast("string"))
+    # Referer: the discovering page (queueItem.referrer); seeds have none.
+    # The batch must carry `referrer` (the crawl restores it from the
+    # fetched log; the deltas do not store it)
+    out = out.withColumn("hdr_referer", F.col("referrer"))
     # Accept-Encoding advertised iff we will decompress (F7,
     # decompressResponses — crawler.js:≈L1150,≈L1560)
     out = out.withColumn(

@@ -124,12 +124,12 @@ def _build_opener(cfg: CrawlConfig) -> urllib.request.OpenerDirector:
     ``clienterror`` (URLError → the reference's ``fetchclienterror``)."""
     import ssl
 
-    if getattr(cfg, "use_proxy", False):
+    if cfg.use_proxy:
         proxy = f"http://{cfg.proxy_hostname}:{cfg.proxy_port}"
         ph = urllib.request.ProxyHandler({"http": proxy, "https": proxy})
     else:
         ph = urllib.request.ProxyHandler({})
-    if getattr(cfg, "ignore_invalid_ssl", False):
+    if cfg.ignore_invalid_ssl:
         ctx = ssl.create_default_context()
         ctx.check_hostname = False
         ctx.verify_mode = ssl.CERT_NONE
@@ -139,7 +139,7 @@ def _build_opener(cfg: CrawlConfig) -> urllib.request.OpenerDirector:
         # load_default_certs when cafile is given), silently failing every
         # public-CA https fetch on clusters that add an internal CA
         ctx = ssl.create_default_context()
-        ca_file = getattr(cfg, "ssl_ca_file", "") or None
+        ca_file = cfg.ssl_ca_file or None
         if ca_file:
             ctx.load_verify_locations(cafile=ca_file)
     hh = urllib.request.HTTPSHandler(context=ctx)
@@ -251,7 +251,7 @@ def http_fetch(batch: DataFrame, cfg: CrawlConfig,
     resp_cols = [n for n, _ in RESPONSE_FIELDS] + extra
     timeout_s = float(cfg.fetch_timeout_ms) / 1000.0
     cap = int(cfg.max_resource_size)
-    threads = max(1, int(getattr(cfg, "http_threads_per_task", 8)))
+    threads = max(1, int(cfg.http_threads_per_task))
     delays = dict(crawl_delays or {})
     header_cols = list(_HEADER_COLS)
 

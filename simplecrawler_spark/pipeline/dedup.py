@@ -31,33 +31,36 @@ _MERSENNE = np.uint64((1 << 61) - 1)
 _LOG = logging.getLogger(__name__)
 
 
-def _scan_file_stats(df: DataFrame, max_files: int = 64) -> tuple[int, int] | None:
-    """(total_bytes, total_rows) of a FILE-BACKED DataFrame's source files,
-    from driver-side metadata only (paths + parquet footers) — no job, no
-    plan execution. Returns None for non-file sources, remote filesystems,
+def _scan_file_stats(df: DataFrame, max_files: int = 64) -> tuple[int, int, int] | None:
+    """(total_bytes, total_rows, uncompressed_bytes) of a FILE-BACKED
+    DataFrame's parquet source files, from driver-side metadata only (paths
+    + parquet footers) — no job, no plan execution. ``uncompressed_bytes``
+    sums the row groups' ``total_byte_size``: it sizes broadcast decisions
+    (guide §3.1), which must reflect in-memory row width, not compressed
+    file size. None for non-file / non-parquet sources, remote filesystems,
     or when the file list is large enough that statting it isn't free."""
+    import pyarrow.parquet as pq
+
     try:
         files = df.inputFiles()
     except Exception:
         return None
     if not files or len(files) > max_files:
         return None
-    total_bytes = total_rows = 0
+    total_bytes = total_rows = uncompressed = 0
     for f in files:
         p = f[7:] if f.startswith("file://") else (f[5:] if f.startswith("file:") else f)
-        if not os.path.exists(p):
+        if not (p.endswith(".parquet") and os.path.exists(p)):
+            return None
+        try:
+            md = pq.ParquetFile(p).metadata
+        except Exception:
             return None
         total_bytes += os.path.getsize(p)
-        if p.endswith(".parquet"):
-            import pyarrow.parquet as pq
-
-            try:
-                total_rows += pq.ParquetFile(p).metadata.num_rows
-            except Exception:
-                return None
-        else:
-            return None
-    return total_bytes, total_rows
+        total_rows += md.num_rows
+        uncompressed += sum(md.row_group(i).total_byte_size
+                            for i in range(md.num_row_groups))
+    return total_bytes, total_rows, uncompressed
 
 
 def spread_small_input(df: DataFrame) -> DataFrame:
@@ -74,7 +77,7 @@ def spread_small_input(df: DataFrame) -> DataFrame:
     stats = _scan_file_stats(df)
     if stats is None:
         return df
-    total_bytes, _ = stats
+    total_bytes = stats[0]
     spark = df.sparkSession
     p = spark.sparkContext.defaultParallelism
     raw = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b").lower()
@@ -86,34 +89,6 @@ def spread_small_input(df: DataFrame) -> DataFrame:
     if est_parts < p:
         return df.repartition(p)
     return df
-
-
-def _uncompressed_input_bytes(df: DataFrame, max_files: int = 64) -> int | None:
-    """Total UNCOMPRESSED bytes of a file-backed DataFrame's parquet source
-    (sum of row-group ``total_byte_size`` footers) — driver-side metadata
-    only, no job. None for non-file / non-parquet / large-file-list inputs.
-    Used to size verify-side broadcast decisions (guide §3.1): the estimate
-    must reflect in-memory row width, which compressed file size does not."""
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return None
-    if not files or len(files) > max_files:
-        return None
-    total = 0
-    for f in files:
-        p = f[7:] if f.startswith("file://") else (f[5:] if f.startswith("file:") else f)
-        if not (p.endswith(".parquet") and os.path.exists(p)):
-            return None
-        import pyarrow.parquet as pq
-
-        try:
-            md = pq.ParquetFile(p).metadata
-        except Exception:
-            return None
-        total += sum(md.row_group(i).total_byte_size
-                     for i in range(md.num_row_groups))
-    return total
 
 
 # broadcast the per-doc verify relation (gram-hash sets / packed
@@ -406,7 +381,8 @@ def minhash_oph_pairs(docs: DataFrame, threshold: float = 0.5, n: int = 5,
     # within-document 60-bit md5-prefix collision, P(collision) ≈ 2.5e-14
     # per doc; verified result-hash-identical against the join shape at
     # sf0.001/0.01/0.1/1.0.)
-    est = _uncompressed_input_bytes(docs)
+    stats = _scan_file_stats(docs)
+    est = stats[2] if stats is not None else None
     # per-doc array bytes ≈ 8 B per gram ≈ 8 × text chars (distinct 5-grams
     # of an L-char doc number ≤ L-4); ×2 slack for array/row overhead
     bcast = est is not None and est * 16 <= _VERIFY_BROADCAST_CAP

@@ -44,25 +44,20 @@ from simplecrawler_spark.operators.scheduler import assign_seq, select_batch
 from simplecrawler_spark.storage.compaction import plan_and_compact, read_warehouse_table
 from simplecrawler_spark.storage.snapshots import Warehouse
 
-# Delta schema v2 (default): `referrer` is NOT stored — it is derivable as
-# the parent row's url_norm (rows carry parent_seq), so the candidate
-# stream's wide exchanges and the seen/fetched deltas drop ~45 B/row of the
-# ~150 B row the 1v4 scaling cell is bandwidth-bound on; CrawlResult.
-# fetched_log restores it with ONE read-time self-join paid by consumers
-# instead of every round, and the http seam restores the Referer header
-# from the fetched log per batch (seq-stats-pruned parquet read). Admission
-# gates and condition specs still see referrer on the candidate row — it is
-# dropped right before the dedupe exchange, like `host`. Set
-# ``cfg.referrer_in_delta=True`` for the v1 inline layout (a resumed
-# warehouse must keep the layout it was started with).
-QUEUED_COLS = ["seq", "url_norm", "url_hash", "host", "depth", "referrer", "parent_seq"]
-QUEUED_COLS_V2 = [c for c in QUEUED_COLS if c != "referrer"]
+# Delta schema v2: `referrer` is NOT stored — it is derivable as the parent
+# row's url_norm (rows carry parent_seq), so the candidate stream's wide
+# exchanges and the seen/fetched deltas drop ~45 B/row of the ~150 B row;
+# CrawlResult.fetched_log restores it with ONE read-time self-join paid by
+# consumers instead of every round, and the http seam restores the Referer
+# header from the fetched log per batch (seq-stats-pruned parquet read).
+# Admission gates and condition specs still see referrer on the candidate
+# row — it is dropped right before the dedupe exchange, like `host`. The v1
+# layout stored referrer inline; resume_state refuses such a warehouse.
+QUEUED_COLS_V2 = ["seq", "url_norm", "url_hash", "host", "depth", "parent_seq"]
 
 # explicit reader schemas: schema inference costs one small Spark job per
 # spark.read.parquet call — a few of those per round is pure serial latency
 # (the efficiency gate's enemy); the engine knows its own table shapes
-SEEN_SCHEMA = ("seq long, url_norm string, url_hash long, host string, depth int, "
-               "referrer string, parent_seq long, round_queued int, round int, bucket int")
 SEEN_SCHEMA_V2 = ("seq long, url_norm string, url_hash long, host string, depth int, "
                   "parent_seq long, round_queued int, round int, bucket int")
 FETCHED_SEQ_SCHEMA = "seq long, round int"
@@ -92,16 +87,15 @@ class CrawlResult:
         The payload table is written by its own per-round job (reading the
         just-written fetched delta) — the read-time join on ``seq`` (unique)
         keeps the consumer-facing schema identical to when the columns were
-        inlined, while the write path stays one pass. Delta schema v2 stores
-        no ``referrer`` column (QUEUED_COLS note): it is restored here as the
+        inlined, while the write path stays one pass. The deltas store no
+        ``referrer`` column (QUEUED_COLS_V2 note): it is restored here as the
         parent row's url_norm via ONE self-join on parent_seq — paid once by
         the consumer instead of ~45 B/row in every round's exchanges; seeds
-        (parent_seq = -1) keep a null referrer exactly as before."""
+        (parent_seq = -1) get a null referrer."""
         f = read_warehouse_table(spark, self.warehouse, "fetched", self.rounds)
-        if f is not None and "referrer" not in f.columns:
-            parents = f.select(F.col("seq").alias("parent_seq"),
-                               F.col("url_norm").alias("referrer"))
-            f = f.join(parents, "parent_seq", "left")
+        parents = f.select(F.col("seq").alias("parent_seq"),
+                           F.col("url_norm").alias("referrer"))
+        f = f.join(parents, "parent_seq", "left")
         p = read_warehouse_table(spark, self.warehouse, "payload", self.rounds)
         if p is None:
             return (f.withColumn("phash", F.lit(None).cast("long"))
@@ -217,11 +211,6 @@ class CrawlEngine:
         self._cookies_on = bool(cfg.accept_cookies) and (
             cfg.fetch_mode == "http"
             or (web is not None and "set_cookie" in web.columns))
-        # delta schema version (see QUEUED_COLS/QUEUED_COLS_V2 note above)
-        if getattr(cfg, "referrer_in_delta", False):
-            self._queued_cols, self._seen_schema = QUEUED_COLS, SEEN_SCHEMA
-        else:
-            self._queued_cols, self._seen_schema = QUEUED_COLS_V2, SEEN_SCHEMA_V2
 
     def _tick(self, phase: str, t0: float) -> float:
         import time as _t
@@ -352,8 +341,8 @@ class CrawlEngine:
 
     def _remaining(self, upto_round: int, watermark: int) -> DataFrame:
         queued = read_warehouse_table(
-            self.spark, self.wh, "seen", upto_round, self._seen_schema
-        ).where(F.col("seq") >= watermark).select(*self._queued_cols, "round_queued")
+            self.spark, self.wh, "seen", upto_round, SEEN_SCHEMA_V2
+        ).where(F.col("seq") >= watermark).select(*QUEUED_COLS_V2, "round_queued")
         if self.cfg.host_budget <= 0 and not self.cfg.honor_crawl_delay:
             # FIFO: fetched seqs are exactly the prefix [0, watermark) —
             # D5's _oldestUnfetchedIndex as a pushed-down range predicate;
@@ -380,15 +369,12 @@ class CrawlEngine:
         tiered-probe Arrow round trip and the seq-assignment exchange.
         ``host`` (~18 B, derivable from url_norm by regexp) is dropped right
         after the admission gates (which see the full row) and recomputed at
-        write time — bit-identical, join-free. ``referrer`` deliberately
-        STAYS in the stream: the map-side min_by combine collapses duplicate
-        candidates before the groupBy exchange, so referrer costs ~45 B per
-        post-combine row, which a clean serialized A/B measured CHEAPER than
-        the alternative (restoring it after dedupe via a parent_seq join
-        against the round's batch — a full extra sort-merge shuffle at wide-
-        crawl budgets: 245 s vs 226 s on the pinned 4-core 8M-URL cell; the
-        earlier +29% claim for the join variant was contaminated by a
-        concurrent official scaling run, see BENCH.md §4)."""
+        write time — bit-identical, join-free. ``referrer`` (the parent's
+        url_norm, ~45 B) is dropped at the same point and never written: the
+        deltas carry ``parent_seq``, from which readers restore it on demand
+        (``CrawlResult.fetched_log``, the http seam's Referer), so every
+        candidate row crosses the exchanges ~45 B narrower and no round pays
+        a join to put it back."""
         import time as _t
 
         from pyspark.sql import Observation
@@ -427,11 +413,9 @@ class CrawlEngine:
         t = self._tick("admit_gates", t)
         admitted = gated.where(F.col("reject").isNull()).drop("reject")
         # slim the candidate rows for the wide exchanges (docstring above);
-        # the admission gates and condition specs above saw the full row
-        # (incl. referrer — only the v1 inline layout carries it further)
-        admitted = admitted.drop("host")
-        if "referrer" not in self._queued_cols:
-            admitted = admitted.drop("referrer")
+        # the admission gates and condition specs above saw the full row,
+        # referrer included
+        admitted = admitted.drop("host", "referrer")
 
         # in-batch first-wins dedupe (U3/J1): min_by over (parent_seq,
         # link_idx) — map-side combinable partial agg, so heavily duplicated
@@ -480,7 +464,7 @@ class CrawlEngine:
             # recomputed from url_norm — bit-identical to the pre-drop value
             restored = numbered.withColumn(
                 "host", F.regexp_extract("url_norm", _HOST_RE, 1))
-            queued = restored.withColumn("round_queued", F.lit(rnd)).select(*self._queued_cols, "round_queued")
+            queued = restored.withColumn("round_queued", F.lit(rnd)).select(*QUEUED_COLS_V2, "round_queued")
             if cfg.dedupe_mode == "tiered":
                 dd.register_new(
                     queued, self.wh.root, self.wh.round_dir("seen", rnd),
@@ -617,7 +601,7 @@ class CrawlEngine:
                      & (F.size("set_cookie") > 0))
               .select("seq", "host",
                       F.posexplode("set_cookie").alias("idx", "sc")))
-        cap = int(getattr(self.cfg, "cookie_jar_cap", 100_000))
+        cap = int(self.cfg.cookie_jar_cap)
         rows = (last_per_cookie_identity(df)
                 .orderBy(F.desc("o")).limit(cap + 1).collect())
         if len(rows) > cap:
@@ -869,6 +853,25 @@ class CrawlEngine:
                         out.add(int(bm.group(1)))
         return out
 
+    def _refuse_v1_layout(self, last: int) -> None:
+        """Raise before resume touches anything if the warehouse was written
+        in the retired v1 delta layout (``referrer`` stored inline). The
+        layout is read from the data — the parquet footer of one committed
+        ``seen`` file, driver-side, no Spark job — because manifests written
+        before and after v1's retirement carry no layout key."""
+        import glob
+
+        import pyarrow.parquet as pq
+
+        part = next((f for d in self.wh.data_paths("seen", last)
+                     for f in sorted(glob.glob(os.path.join(d, "**", "*.parquet"),
+                                               recursive=True))), None)
+        if part is not None and "referrer" in pq.read_schema(part).names:
+            raise ValueError(
+                f"warehouse {self.wh.root} stores `referrer` inline in its seen "
+                f"deltas: the retired v1 delta layout, which this engine cannot "
+                f"resume; commit 2b3c116 is the last that can")
+
     def resume_state(self) -> tuple[int, int, int, int]:
         """S5 — defrost: last committed manifest wins; orphan round dirs from
         a crashed round are dropped; sidecars rebuilt from committed deltas
@@ -880,18 +883,7 @@ class CrawlEngine:
         if last is None:
             raise ValueError("nothing to resume: no committed manifest")
         m = self.wh.load_manifest(last)
-        # the delta layout is a property of the WAREHOUSE, fixed at start:
-        # refuse a resume under the other layout instead of reading mixed
-        # per-round schemas (manifests without the key predate v2 = inline)
-        import json as _json
-
-        mcfg = _json.loads(m["config"]) if m.get("config") else {}
-        m_v1 = bool(mcfg.get("referrer_in_delta", True))
-        if m_v1 != bool(getattr(self.cfg, "referrer_in_delta", False)):
-            raise ValueError(
-                f"warehouse delta layout is "
-                f"{'v1 (referrer inline)' if m_v1 else 'v2 (referrer derived)'}"
-                f" — set cfg.referrer_in_delta={m_v1} to resume it")
+        self._refuse_v1_layout(last)
         orphan_buckets = self._orphan_seen_buckets(last)
         self.wh.drop_orphans(last)
         self.seed_hosts = m["seed_hosts"]
@@ -906,9 +898,9 @@ class CrawlEngine:
                 dd.rebuild_sidecars(
                     self.spark, self.wh.root,
                     read_warehouse_table(self.spark, self.wh,
-                                         "seen", last, self._seen_schema),
+                                         "seen", last, SEEN_SCHEMA_V2),
                     self.cfg.n_buckets,
-                    getattr(self.cfg, "seen_capacity", 2_000_000),
+                    self.cfg.seen_capacity,
                     self.cfg.bloom_bits_per_key, buckets=scope)
         if self.images is not None:
             self._repair_payload(last)
@@ -971,7 +963,7 @@ class CrawlEngine:
                 pacer.round_started()
             if cfg.dedupe_mode == "exact":
                 seen_df_exact = read_warehouse_table(
-                    self.spark, self.wh, "seen", rnd - 1, self._seen_schema)
+                    self.spark, self.wh, "seen", rnd - 1, SEEN_SCHEMA_V2)
             remaining = self._remaining(rnd - 1, watermark)
             host_caps = self._host_caps()
             use_window = cfg.host_budget > 0 or host_caps is not None
@@ -1042,36 +1034,33 @@ class CrawlEngine:
                 # customHeaders merged last) — then real GETs below; same
                 # output contract as fetch_batch, so everything downstream
                 # (classify, discovery, gates, dedupe, writer) is
-                # mode-agnostic
-                b_req = batch
-                if "referrer" not in batch.columns:
-                    # delta schema v2: the Referer header is the parent's
-                    # url_norm, restored from the fetched log. The scan is
-                    # pruned by an EXPLICIT seq range predicate computed from
-                    # the batch (one tiny agg over ≤budget rows) — a join key
-                    # alone is not a pushable predicate, so without this the
-                    # restore would re-read the whole fetched table every
-                    # round, O(rounds × corpus) cumulative. With it, parquet
-                    # row-group stats skip everything outside the batch's
-                    # parent_seq span. http rounds are network-bound, so the
-                    # restore is paid where it's cheapest — the table-mode
-                    # hot path never carries or restores it.
-                    pb = batch.agg(F.min("parent_seq").alias("lo"),
-                                   F.max("parent_seq").alias("hi")).first()
-                    flog = read_warehouse_table(
-                        self.spark, self.wh, "fetched", rnd - 1,
-                        "seq long, url_norm string, round int")
-                    if flog is None or pb["lo"] is None or pb["hi"] < 0:
-                        b_req = batch.withColumn(
-                            "referrer", F.lit(None).cast("string"))
-                    else:
-                        parents = flog.where(
-                            F.col("seq").between(max(int(pb["lo"]), 0),
-                                                 int(pb["hi"]))
-                        ).select(
-                            F.col("seq").alias("parent_seq"),
-                            F.col("url_norm").alias("referrer"))
-                        b_req = batch.join(parents, "parent_seq", "left")
+                # mode-agnostic.
+                # The deltas store no referrer: the Referer header is the
+                # parent's url_norm, restored from the fetched log. The
+                # scan is pruned by an EXPLICIT seq range predicate computed
+                # from the batch (one tiny agg over ≤budget rows) — a join
+                # key alone is not a pushable predicate, so without this the
+                # restore would re-read the whole fetched table every round,
+                # O(rounds × corpus) cumulative. With it, parquet row-group
+                # stats skip everything outside the batch's parent_seq span.
+                # http rounds are network-bound, so the restore is paid where
+                # it's cheapest — the table-mode hot path never restores it.
+                pb = batch.agg(F.min("parent_seq").alias("lo"),
+                               F.max("parent_seq").alias("hi")).first()
+                flog = read_warehouse_table(
+                    self.spark, self.wh, "fetched", rnd - 1,
+                    "seq long, url_norm string, round int")
+                if flog is None or pb["lo"] is None or pb["hi"] < 0:
+                    b_req = batch.withColumn(
+                        "referrer", F.lit(None).cast("string"))
+                else:
+                    parents = flog.where(
+                        F.col("seq").between(max(int(pb["lo"]), 0),
+                                             int(pb["hi"]))
+                    ).select(
+                        F.col("seq").alias("parent_seq"),
+                        F.col("url_norm").alias("referrer"))
+                    b_req = batch.join(parents, "parent_seq", "left")
                 fetch_in = build_request_headers(
                     b_req, cfg,
                     cookie_rows=(self.jar.to_rows()
@@ -1150,7 +1139,7 @@ class CrawlEngine:
             # ~6.5 s/round of serial floor in the round-3 profile
             fetched = outcomes.withColumn("round_fetched", F.lit(rnd))
             fetched_sel = fetched.select(
-                *self._queued_cols, "round_queued", "status", "event", "status_code",
+                *QUEUED_COLS_V2, "round_queued", "status", "event", "status_code",
                 "failure", "content_type", "body_size", "content_length",
                 "sent_incorrect_size", "image_id", "caption",
                 "request_latency_ms", "download_time_ms", "request_time_ms",
@@ -1308,7 +1297,7 @@ class CrawlEngine:
                 # is the transaction, exactly like round deltas
                 self.compacts = plan_and_compact(
                     self.spark, self.wh, rnd, self.compacts,
-                    cfg.compact_max_levels, self._seen_schema)
+                    cfg.compact_max_levels, SEEN_SCHEMA_V2)
                 compacted = True
                 t = self._tick("compaction", t)
             manifest = {"next_seq": next_seq, "watermark": watermark,

@@ -30,3 +30,12 @@ def test_plan_and_storage_names_exist():
     assert callable(crawl.CrawlEngine.resume_state)
     assert callable(compaction.plan_and_compact)
     assert callable(compaction.read_warehouse_table)
+
+
+def test_one_delta_layout():
+    """The deltas never store referrer (readers derive it from parent_seq),
+    and the two layout constants perfbench imports describe the same rows."""
+    assert "referrer" not in crawl.QUEUED_COLS_V2
+    seen_cols = [c.split()[0] for c in crawl.SEEN_SCHEMA_V2.split(",")]
+    assert "referrer" not in seen_cols
+    assert set(crawl.QUEUED_COLS_V2) <= set(seen_cols)

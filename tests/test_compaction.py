@@ -165,7 +165,7 @@ def test_compact_seen_multichunk_byte_identity(spark, tmp_path):
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
-    from simplecrawler_spark.plans.crawl import SEEN_SCHEMA
+    from simplecrawler_spark.plans.crawl import SEEN_SCHEMA_V2
     from simplecrawler_spark.storage.compaction import _compact_seen
     from simplecrawler_spark.storage.snapshots import Warehouse
 
@@ -178,7 +178,6 @@ def test_compact_seen_multichunk_byte_identity(spark, tmp_path):
             F.xxhash64(F.col("id").cast("string")).alias("url_hash"),
             F.concat(F.lit("h"), (F.col("id") % 7).cast("string")).alias("host"),
             F.lit(1).alias("depth"),
-            F.lit(None).cast("string").alias("referrer"),
             F.lit(0).cast("long").alias("parent_seq"),
         )
         for rnd in range(3):
@@ -197,7 +196,7 @@ def test_compact_seen_multichunk_byte_identity(spark, tmp_path):
                            str(batch_rows))
         try:
             # row_group=256 << 5000/4 rows per bucket: multi-group files
-            assert _compact_seen(spark, wh, 2, layout, SEEN_SCHEMA, row_group=256)
+            assert _compact_seen(spark, wh, 2, layout, SEEN_SCHEMA_V2, row_group=256)
         finally:
             spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
         d = wh.compact_dir("seen", 2)

@@ -111,6 +111,42 @@ def test_clean_resume_runs_zero_rebuild_jobs(spark, corpus, reference, tmp_path,
     assert _tables(spark, resumed) == reference
 
 
+def test_resume_refuses_v1_inline_referrer_warehouse(spark, tmp_path, monkeypatch):
+    """A warehouse whose seen deltas store ``referrer`` inline (the retired
+    v1 layout) is refused with one ValueError, read from the data, before
+    resume drops or rebuilds anything. Hand-written warehouse, no crawl."""
+    import json
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from simplecrawler_spark.storage.snapshots import Warehouse
+
+    wh = Warehouse(str(tmp_path / "wh_v1"))
+    # manifests never recorded the layout once v1 was retired: no key here
+    with open(os.path.join(wh.root, "manifests", "manifest-0.json"), "w") as f:
+        json.dump({"round": 0, "parent": None, "next_seq": 1, "watermark": 0,
+                   "queued": 1, "seed_hosts": ["host0.example"],
+                   "compacts": {}}, f)
+    seen = os.path.join(wh.round_dir("seen", 0), "bucket=0")
+    os.makedirs(seen)
+    pq.write_table(pa.table({
+        "seq": [0], "url_norm": ["http://host0.example/p/0"],
+        "url_hash": [7], "host": ["host0.example"], "depth": [0],
+        "referrer": pa.array([None], pa.string()), "parent_seq": [-1],
+        "round_queued": [0]}), os.path.join(seen, "part-00000.parquet"))
+    orphan = wh.round_dir("fetched", 1)  # uncommitted: drop_orphans' prey
+    os.makedirs(orphan)
+
+    dropped = []
+    monkeypatch.setattr(Warehouse, "drop_orphans",
+                        lambda self, rnd: dropped.append(rnd))
+    eng = CrawlEngine(spark, _cfg(wh.root), None)
+    with pytest.raises(ValueError, match="v1 delta layout"):
+        eng.resume_state()
+    assert dropped == [] and os.path.isdir(orphan)
+
+
 def test_lineage_chain_intact(spark, corpus, tmp_path):
     web = spark.read.parquet(f"{corpus}/web")
     res = CrawlEngine(spark, _cfg(str(tmp_path / "wh_lin"), max_rounds=4), web).run()
